@@ -9,6 +9,7 @@ operator should express predicates declaratively rather than materialize.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -98,10 +99,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixture tables as temp views for the spark.sql entry path.
 
@@ -122,17 +119,27 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     would re-pay ~10 py4j round trips on the fast path this memo exists to
     remove; the driver contract never mutates catalog names out-of-band.
     """
+    for name in TABLES:
+        register_view(spark, sf_dir, name, lambda n=name: table(spark, sf_dir, n))
+
+
+def register_view(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> None:
+    """Register ``build()`` as temp view ``name`` unless this session's view
+    memo says ``name`` already points at ``sf_dir`` — the one owner of that
+    memo, shared by the fixture views and ``chsql.ch_sql``'s ``cdc_changes``
+    change-log view."""
     sfa = os.path.abspath(sf_dir)
     memo = spark.__dict__.setdefault("_ccs_view_memo", {})
-    for name in TABLES:
-        if memo.get(name) != sfa:
-            table(spark, sf_dir, name).createOrReplaceTempView(name)
-            memo[name] = sfa
+    if memo.get(name) != sfa:
+        build().createOrReplaceTempView(name)
+        memo[name] = sfa
 
 
 def forget_view(spark: SparkSession, name: str) -> None:
     """Drop ``name`` from the registered-view memo (the view was dropped or
-    repointed by a caller); the next register_views restores it."""
+    repointed by a caller); the next registration restores it."""
     spark.__dict__.get("_ccs_view_memo", {}).pop(name, None)
 
 

@@ -93,12 +93,25 @@ def collapse_signs(
     ).select(pk, "_s.*", sign, version)
 
 
-def apply_replacing(
-    changes: DataFrame, pk: str = PK, version: str = "version", op: str = "op"
-) -> DataFrame:
+def merge_versioned(state: DataFrame | None, batch: DataFrame, pk: str = PK) -> DataFrame:
+    """ReplacingMergeTree MERGE: version-aware upsert of a batch into state.
+
+    State schema = change schema (payload + op + version), one row per key,
+    tombstones retained. union + latest-per-key is a single hash aggregation
+    shuffled on the PK — at 100 TB both sides would be bucketed on the PK so
+    the merge is shuffle-free.
+    """
+    return latest_per_key(batch if state is None else state.unionByName(batch), pk)
+
+
+def read_final_state(state: DataFrame) -> DataFrame:
+    """ReplacingMergeTree FINAL read: drop tombstones and bookkeeping."""
+    return state.filter(F.col("op") != "DELETE").drop("op", "version")
+
+
+def apply_replacing(changes: DataFrame, pk: str = PK) -> DataFrame:
     """ReplacingMergeTree: latest version per PK wins; tombstones drop."""
-    latest = latest_per_key(changes, pk, version)
-    return latest.filter(F.col(op) != "DELETE").drop(op, version)
+    return read_final_state(latest_per_key(changes, pk))
 
 
 @query("cdc_apply_replacing", oracle=FINAL_STATE_SQL)
@@ -261,6 +274,8 @@ def cdc_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 __all__ = [
     "latest_per_key",
     "collapse_signs",
+    "merge_versioned",
+    "read_final_state",
     "apply_replacing",
     "cdc_apply_replacing",
     "cdc_apply_collapsing",
@@ -476,8 +491,9 @@ def cdc_merge_associativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately NOT aligned with keys, so a key's versions straddle
     shards. Each shard collapses independently (a CH part), the partial
     states union and collapse again (the merge), and the result is
-    row-compared against the single-pass collapse. Output = the live
-    final state + per-row equality flag (hash-checked TRUE).
+    row-compared (op and version included, tombstones too) against the
+    single-pass collapse. Output = the live final state + per-row equality
+    flag (hash-checked TRUE).
     """
     log = change_log(spark, sf_dir)
     shard = F.pmod(F.xxhash64(F.col(PK), F.col("version")), F.lit(3))
@@ -486,20 +502,15 @@ def cdc_merge_associativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     merged = latest_per_key(parts[0].unionByName(parts[1]).unionByName(parts[2]))
     direct = latest_per_key(log)
-    live_cols = [c for c in direct.columns if c not in ("op",)]
-    m = merged.filter(F.col("op") != "DELETE").select(
-        *[F.col(c).alias(f"m_{c}") for c in live_cols]
+    m = merged.select(*[F.col(c).alias(f"m_{c}") for c in direct.columns])
+    rest = [c for c in direct.columns if c != PK]
+    eq = F.struct(*[F.col(c) for c in rest]).eqNullSafe(
+        F.struct(*[F.col(f"m_{c}") for c in rest])
     )
-    d = direct.filter(F.col("op") != "DELETE")
-    payload = [c for c in live_cols if c != PK]
-    eq = F.struct(*[F.col(c) for c in payload]).eqNullSafe(
-        F.struct(*[F.col(f"m_{c}") for c in payload])
+    both = direct.join(m, direct[PK] == m[f"m_{PK}"], "inner").select(
+        *direct.columns, eq.alias("two_phase_equal")
     )
-    return (
-        d.join(m, d[PK] == m[f"m_{PK}"], "inner")
-        .select(*ORDER_COLS, eq.alias("two_phase_equal"))
-        .orderBy(PK)
-    )
+    return read_final_state(both).orderBy(PK)
 
 
 @query(

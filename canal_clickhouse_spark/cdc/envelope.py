@@ -24,6 +24,7 @@ from pyspark.sql import types as T
 
 from ..catalog import table
 from ..registry import query
+from .apply import apply_replacing
 
 FLAT_MESSAGE_SCHEMA = T.StructType(
     [
@@ -186,6 +187,19 @@ def build_envelope(
     return df.select(F.to_json(F.struct(*fields)).alias("msg"))
 
 
+def _parse_rows(msgs: DataFrame, msg_col: str, typed: list[Column]) -> DataFrame:
+    """The one FlatMessage parse: ``from_json`` → ``explode(data)`` → the
+    ``typed`` payload columns (built over the exploded ``row`` map) plus the
+    envelope's event time and op."""
+    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
+    rows = parsed.select("m.*", F.explode("m.data").alias("row"))
+    return rows.select(
+        *typed,
+        F.timestamp_millis(F.col("es")).alias("event_time"),
+        F.col("type").alias("op"),
+    )
+
+
 def parse_envelope(
     msgs: DataFrame, mapping: dict[str, str], msg_col: str = "msg"
 ) -> DataFrame:
@@ -194,14 +208,8 @@ def parse_envelope(
     ``explode(data)`` fans multi-row messages out; the mapping casts each
     stringly-typed column. Emits the envelope's op and event time alongside.
     """
-    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
-    rows = parsed.select("m.*", F.explode("m.data").alias("row"))
     typed = [F.col("row").getItem(c).cast(t).alias(c) for c, t in mapping.items()]
-    return rows.select(
-        *typed,
-        F.timestamp_millis(F.col("es")).alias("event_time"),
-        F.col("type").alias("op"),
-    )
+    return _parse_rows(msgs, msg_col, typed)
 
 
 def parse_envelope_typed(
@@ -227,19 +235,13 @@ def parse_envelope_typed(
             raise ValueError("no mysqlType map found in any envelope message")
         mysql_types = dict(peek[0])
     casts, enums = mapping_from_mysql_types(mysql_types)
-    parsed = msgs.select(F.from_json(msg_col, FLAT_MESSAGE_SCHEMA).alias("m"))
-    rows = parsed.select("m.*", F.explode("m.data").alias("row"))
     typed: list[Column] = []
     for c, t in casts.items():
         col = F.col("row").getItem(c)
         if c in enums:
             col = F.when(col.isin(enums[c]), col)
         typed.append(col.cast(t).alias(c))
-    return rows.select(
-        *typed,
-        F.timestamp_millis(F.col("es")).alias("event_time"),
-        F.col("type").alias("op"),
-    )
+    return _parse_rows(msgs, msg_col, typed)
 
 
 @query(
@@ -563,8 +565,9 @@ def cdc_multi_table_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     - ``orders`` route: 3-round INSERT/UPDATE/DELETE log (the cdc_changes
       derivation) serialized through FlatMessage JSON with ``es`` carrying
-      the version; replacing-apply = max_by(payload, event_time) then drop
-      tombstones — one hash aggregation per route, no window sort.
+      the version; the replacing apply is ``apply_replacing`` (latest per
+      key by event time, tombstones dropped) — one hash aggregation per
+      route, no window sort.
     - ``customer`` route: INSERT-only snapshot with unsigned widening
       (``bigint unsigned`` PK → Decimal(20,0)) and an ENUM mapping that
       deliberately omits 'MACHINERY' — those rows surface in the NULL
@@ -628,11 +631,8 @@ def cdc_multi_table_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     c_parsed = parse_envelope_typed(
         topic.filter(route == "customer"), mysql_types=cust_types
     )
-    o_final = (
-        o_parsed.groupBy("o_orderkey")
-        .agg(F.max_by(F.struct("o_orderstatus", "op"), "event_time").alias("_s"))
-        .select("o_orderkey", "_s.*")
-        .filter(F.col("op") != "DELETE")
+    o_final = apply_replacing(
+        o_parsed.withColumnRenamed("event_time", "version"), "o_orderkey"
     )
     o_sum = o_final.agg(
         F.lit("orders").alias("table_name"),

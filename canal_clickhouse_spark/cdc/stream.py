@@ -4,7 +4,10 @@ The reference's main loop — consume binlog batches, apply onto the sink,
 persist the position so a restart resumes exactly once (/root/reference/
 README.md:1, Canal semantics are public knowledge). The Spark-native shape:
 Structured Streaming file/Kafka source → ``foreachBatch`` version-aware merge
-→ checkpointed offsets.
+→ checkpointed offsets. There is one such sink: ``CdcPipeline.stream``
+(pipeline.py), which ``cdc_checkpoint_resume`` drives over FlatMessage files;
+its merge and FINAL read are ``merge_versioned`` / ``read_final_state`` from
+``cdc/apply.py``.
 
 The merge keeps tombstones (deleted keys stay in state with op='DELETE') and
 resolves strictly by version, so it is insensitive to micro-batch boundaries
@@ -16,7 +19,6 @@ what makes the at-least-once transport safe.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,25 +26,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..registry import query
-from .apply import latest_per_key
+from .apply import merge_versioned, read_final_state
 from .changes import FINAL_STATE_SQL, ORDER_COLS, PK, change_log
-
-
-def merge_versioned(state: DataFrame | None, batch: DataFrame, pk: str = PK) -> DataFrame:
-    """Version-aware upsert of one micro-batch into the state table.
-
-    State schema = change schema (payload + op + version), one row per key,
-    tombstones retained. union + latest-per-key is a single hash aggregation
-    shuffled on the PK — at 100 TB both sides would be bucketed on the PK so
-    the merge is shuffle-free.
-    """
-    both = batch if state is None else state.unionByName(batch)
-    return latest_per_key(both, pk)
-
-
-def read_final_state(state: DataFrame) -> DataFrame:
-    """Queryable latest-state view: drop tombstones and bookkeeping."""
-    return state.filter(F.col("op") != "DELETE").drop("op", "version")
+from .envelope import build_envelope
 
 
 @query("cdc_stream_apply", oracle=FINAL_STATE_SQL)
@@ -89,66 +75,49 @@ def cdc_schema_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(base)
 
 
-def _latest_state_dir(state_root: str, before_batch: int) -> str | None:
-    if not os.path.isdir(state_root):
-        return None
-    best = -1
-    for name in os.listdir(state_root):
-        m = re.fullmatch(r"b(\d+)", name)
-        if m and int(m.group(1)) < before_batch:
-            best = max(best, int(m.group(1)))
-    return os.path.join(state_root, f"b{best}") if best >= 0 else None
-
-
 @query("cdc_checkpoint_resume", oracle=FINAL_STATE_SQL)
 def cdc_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real Structured Streaming apply with offset-checkpointed resume.
 
-    One parquet file per CDC round + ``maxFilesPerTrigger=1`` → three real
-    micro-batches through ``foreachBatch``. Each batch merges into a
-    batch-id-suffixed state snapshot (idempotent on re-run: a replayed batch
-    overwrites its own snapshot — the write is the transactional unit, which
-    is exactly the ClickHouse-sink idempotency contract). A second streaming
-    query on the SAME checkpoint then proves resume: its offset log says
-    everything is committed, so it processes zero batches and state is
-    unchanged. The returned final state hash-matches the batch oracle —
-    stream/batch equivalence end-to-end.
+    The three CDC rounds land as one FlatMessage file each (``es`` = the
+    round) and ``maxFilesPerTrigger=1`` turns them into three real
+    micro-batches through ``CdcPipeline.stream`` — the same ``foreachBatch``
+    sink and ``v{n}/_SUCCESS`` snapshot store a deployment runs. A second
+    streaming query on the SAME checkpoint then proves resume: its offset
+    log says everything is committed, so it processes zero batches and no
+    new snapshot version is committed. The returned FINAL state hash-matches
+    the batch oracle — stream/batch equivalence end-to-end.
     """
+    from ..pipeline import CdcPipeline, TableSync
+
     base = f"/tmp/ccs_ckpt_{os.path.basename(os.path.normpath(sf_dir))}"
     shutil.rmtree(base, ignore_errors=True)
-    src, ckpt, state_root = f"{base}/src", f"{base}/ckpt", f"{base}/state"
+    src = f"{base}/src"
     changes = change_log(spark, sf_dir)
     for v in (0, 1, 2):
-        changes.filter(F.col("version") == v).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
+        build_envelope(
+            changes.filter(F.col("version") == v),
+            "shop",
+            "orders",
+            [PK],
+            {c: F.col(c).cast("string") for c in ORDER_COLS},
+            es=F.col("version").cast("long"),
+            op=F.col("op"),
+        ).coalesce(1).write.mode("append").text(src)
 
-    def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        sess = bdf.sparkSession
-        prev_dir = _latest_state_dir(state_root, batch_id)
-        prev = sess.read.parquet(prev_dir) if prev_dir else None
-        merged = merge_versioned(prev, bdf)
-        merged.write.mode("overwrite").parquet(os.path.join(state_root, f"b{batch_id}"))
+    rule = TableSync(
+        "shop", "orders", pk=PK,
+        mapping={f.name: f.dataType.simpleString()
+                 for f in changes.select(*ORDER_COLS).schema},
+    )
+    pipe = CdcPipeline(spark, [rule], f"{base}/state", f"{base}/ckpt")
 
     def run_once() -> None:
-        stream = (
-            spark.readStream.schema(changes.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        msgs = spark.readStream.option("maxFilesPerTrigger", "1").text(src)
+        pipe.stream(msgs, msg_col="value").awaitTermination()
 
     run_once()
-    n_after_first = len(os.listdir(state_root))
+    committed = pipe._latest_version(rule)
     run_once()  # resume from checkpoint: no new files -> no new batches
-    assert len(os.listdir(state_root)) == n_after_first, "resume replayed batches"
-
-    final_dir = _latest_state_dir(state_root, before_batch=1 << 30)
-    assert final_dir is not None
-    return read_final_state(spark.read.parquet(final_dir)).select(*ORDER_COLS)
+    assert pipe._latest_version(rule) == committed, "resume replayed batches"
+    return pipe.read_table("shop", "orders").select(*ORDER_COLS)

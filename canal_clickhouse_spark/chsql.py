@@ -107,7 +107,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import sql as run_sql
+from .catalog import register_view, sql as run_sql
 
 
 def _split_args(s: str) -> list[str]:
@@ -331,13 +331,6 @@ def _lit_match(regex: re.Pattern, q: str, pos: int = 0) -> _OrigMatch | None:
     """`regex.match` on the literal-masked text; groups read the original."""
     m = regex.match(_mask_literals(q), pos)
     return _OrigMatch(m, q) if m else None
-
-
-def _lit_finditer(regex: re.Pattern, q: str):
-    """`regex.finditer` on the literal-masked text (one mask pass)."""
-    orig = q
-    for m in regex.finditer(_mask_literals(q)):
-        yield _OrigMatch(m, orig)
 
 
 def _clip_unbalanced(masked: str, start: int, end: int) -> int:
@@ -1298,10 +1291,6 @@ def _vec_l2sq(a: str, b: str) -> str:
     )
 
 
-_BOOLISH_RE = re.compile(
-    r"(?i)(?:[<>=!]|\bLIKE\b|\bILIKE\b|\bIN\b|\bIS\b|\bAND\b|\bOR\b"
-    r"|\bNOT\b|\bBETWEEN\b|\bRLIKE\b|\bEXISTS\b)"
-)
 _LEAF_BOOLISH_RE = re.compile(
     r"(?i)(?:[<>=!]|\bLIKE\b|\bILIKE\b|\bRLIKE\b|\bIN\b|\bIS\b"
     r"|\bBETWEEN\b|\bEXISTS\b|\bTRUE\b|\bFALSE\b)"
@@ -6891,7 +6880,9 @@ def _dict_attr(attr_arg: str, fn: str) -> str:
 _SAMPLE_MOD = 4294967296  # 2^32
 
 
-def _from_replacement(tbl: str, has_final: bool, frac: float | None) -> str | None:
+def _from_replacement(
+    tbl: str, has_final: bool, frac: float | None, alias: str | None
+) -> str | None:
     meta = _TABLE_META.get(tbl)
     if meta is None:
         raise ValueError(f"FINAL/SAMPLE on unknown table {tbl!r}")
@@ -6924,11 +6915,17 @@ def _from_replacement(tbl: str, has_final: bool, frac: float | None) -> str | No
             f" (PARTITION BY {meta['key']} ORDER BY {version} DESC) AS _rn"
             f" FROM {src}) WHERE {cond})"
         )
-    return f"FROM {src} {tbl}" if src != tbl else f"FROM {tbl}"
+    return f"FROM {src} {alias or tbl}" if src != tbl else f"FROM {tbl}"
 
 
+# `[AS] alias` between a table and its FINAL/SAMPLE modifier (CH accepts
+# `FROM t AS o FINAL`); only taken when a modifier follows, and never the
+# FINAL/SAMPLE/AS keywords themselves, so `FROM orders final` stays an alias.
+_MOD_ALIAS = (
+    r"(?:\s+(?:AS\s+)?(?!(?:FINAL|SAMPLE|AS)\b)(\w+)(?=\s+(?:FINAL|SAMPLE)\b))?"
+)
 _FROM_RE = re.compile(
-    r"\bFROM\s+(\w+)(\s+FINAL\b)?"
+    r"\bFROM\s+(\w+)" + _MOD_ALIAS + r"(\s+FINAL\b)?"
     r"(?:\s+SAMPLE\s+(\d+(?:\.\d+)?(?:\s*/\s*\d+)?)"
     r"(\s+OFFSET\s+[\d./]+)?)?(\s+FINAL\b)?",
     re.IGNORECASE,
@@ -8738,11 +8735,11 @@ def _rewrite_clauses(q: str) -> str:
     """
 
     def from_sub(m: re.Match) -> str:
-        has_final = bool(m.group(2) or m.group(5))
-        samp = m.group(3)
+        has_final = bool(m.group(3) or m.group(6))
+        samp = m.group(4)
         frac: float | None = None
         if samp:
-            if m.group(4):
+            if m.group(5):
                 raise ValueError(
                     "SAMPLE ... OFFSET positions the sample window on CH's"
                     " sampling-key space — no Spark analog; use a plain"
@@ -8764,9 +8761,12 @@ def _rewrite_clauses(q: str) -> str:
                     " on CH's sampling-key physical layout; use a SAMPLE"
                     " fraction (rows/count(*)) or ORDER BY rand() LIMIT n"
                 )
+        tbl, alias = m.group(1), m.group(2)
         if not has_final and frac is None:
-            return m.group(0) if samp is None else f"FROM {m.group(1)}"
-        repl = _from_replacement(m.group(1), has_final, frac)
+            if samp is None:
+                return m.group(0)
+            return f"FROM {tbl} {alias}" if alias else f"FROM {tbl}"
+        repl = _from_replacement(tbl, has_final, frac, alias)
         return m.group(0) if repl is None else repl
 
     # Trailing SETTINGS / FORMAT clauses: engine-side knobs (max_threads,
@@ -10221,22 +10221,16 @@ def ch_sql(spark: SparkSession, sf_dir: str, ch_query: str) -> DataFrame:
     """Run a ClickHouse-dialect query against the fixture views (plus the
     ``cdc_changes`` change-log view, the FINAL-able Replacing table).
 
-    The change-log view registration is memoized like the fixture views
-    (r12 optimization): building the 3-branch union plan + the catalog
-    update costs ~200 ms of py4j round trips per call, pure fixed overhead
-    for an identical plan. ChSession DROP/RENAME of a user table named
+    The change-log view registers through ``catalog.register_view``,
+    memoized like the fixture views (r12 optimization): building the
+    3-branch union plan + the catalog update costs ~200 ms of py4j round
+    trips per call, pure fixed overhead for an identical plan. ChSession DROP/RENAME of a user table named
     ``cdc_changes`` calls ``forget_view``, which re-arms the registration —
     the same clobber-on-next-call semantics as the unconditional form.
     """
-    import os as _os
-
     from .cdc.changes import change_log
 
-    sfa = _os.path.abspath(sf_dir)
-    memo = spark.__dict__.setdefault("_ccs_view_memo", {})
-    if memo.get("cdc_changes") != sfa:
-        change_log(spark, sf_dir).createOrReplaceTempView("cdc_changes")
-        memo["cdc_changes"] = sfa
+    register_view(spark, sf_dir, "cdc_changes", lambda: change_log(spark, sf_dir))
     return run_sql(spark, sf_dir, translate(ch_query))
 
 

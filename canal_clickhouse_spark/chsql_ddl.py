@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (re-exported for users)
 
 from .catalog import forget_view, register_views
-from .chsql import translate
+from .chsql import _MOD_ALIAS, translate
 from .registry import query
 from .session import tune
 
@@ -287,16 +287,6 @@ def spark_type_to_ch(spark_type: str) -> str:
         f"no ClickHouse spelling for Spark type {spark_type!r}"
         " (Tuple/struct columns have no CREATE TABLE form here)"
     )
-
-
-# Column-definition decorations (r6 verdict missing #3: real schemas pasted
-# from `SHOW CREATE TABLE` dumps carry CODEC/column-TTL/COMMENT after the
-# type). Keywords recognized at paren/quote depth 0 only, so a DEFAULT
-# expression like `concat('TTL ', x)` can never be split on its literal.
-_COL_DECO_KEYWORDS = (
-    "default", "materialized", "alias", "codec", "ttl", "comment",
-    "ephemeral",
-)
 
 
 def parse_col_def(item: str) -> tuple[str, str, str | None, str, bool]:
@@ -2453,11 +2443,12 @@ class ChSession:
         """``FROM <session_table> FINAL`` → read-time Replacing collapse
         (one row per ORDER BY key, max version) as a named derived table —
         the query-side twin of OPTIMIZE FINAL, and how CH users actually
-        read Replacing tables. Fixture tables' FINAL stays with the main
+        read Replacing tables. ``FROM t [AS] o FINAL`` keeps ``o`` as the
+        derived table's name. Fixture tables' FINAL stays with the main
         translator's rewrite."""
 
         def sub(m: re.Match) -> str:
-            name = m.group(1)
+            name, alias = m.group(1), m.group(2) or m.group(1)
             if name not in self.tables:
                 return m.group(0)  # not ours; translate() handles fixtures
             meta = self.meta.get(name, {})
@@ -2495,7 +2486,7 @@ class ChSession:
                     f" (CASE WHEN _ch_d > 0 THEN {sign} ELSE -({sign}) END)"
                     f" DESC) AS _rn FROM (SELECT *, sum({sign}) OVER"
                     f" (PARTITION BY {keys}, {ver}) AS _ch_d FROM {name}))"
-                    f" WHERE _ch_d != 0 AND _rn = 1) {name}"
+                    f" WHERE _ch_d != 0 AND _rn = 1) {alias}"
                 )
             if engine == "collapsingmergetree":
                 # CH's merge rule needs ROW ORDER (one extra state row →
@@ -2521,7 +2512,7 @@ class ChSession:
                 return (
                     f"FROM (SELECT {cols} FROM"
                     + _collapsing_merge_sql(sign, keys, src)
-                    + f") {name}"
+                    + f") {alias}"
                 )
             if args_:
                 ver, src = args_[0], name
@@ -2545,10 +2536,10 @@ class ChSession:
             return (
                 f"FROM (SELECT {cols} FROM (SELECT *, ROW_NUMBER() OVER ("
                 f"PARTITION BY {keys} ORDER BY {ver} DESC) AS _rn "
-                f"FROM {src}) WHERE _rn = 1) {name}"
+                f"FROM {src}) WHERE _rn = 1) {alias}"
             )
 
-        return re.sub(r"(?is)\bFROM\s+(\w+)\s+FINAL\b", sub, s)
+        return re.sub(r"(?is)\bFROM\s+(\w+)" + _MOD_ALIAS + r"\s+FINAL\b", sub, s)
 
     def _fire_mvs(self, source: str, block: DataFrame, _depth: int = 0) -> None:
         """CH MV contract: each MV whose source table received the block

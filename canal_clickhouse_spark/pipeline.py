@@ -13,12 +13,19 @@ contract on Spark:
     q = pipe.stream(kafka_source(...))         # continuous tail, checkpointed
     pipe.read_table("shop", "orders")          # FINAL-semantics current state
 
+The one CDC apply path: batches parse with ``cdc.envelope.parse_envelope``;
+replacing routes merge and read FINAL with ``cdc.apply.merge_versioned`` /
+``read_final_state``, collapsing routes with ``collapse_signs``; the
+``cdc_checkpoint_resume`` registry key streams through ``stream``.
+
 State layout (MergeTree-part analog): each apply writes a new immutable
-versioned snapshot directory ``state_root/db.table/v{n}`` and readers always
-see the latest complete one — no in-place overwrite, so a crashed write never
-corrupts the readable state, and a replayed micro-batch (at-least-once
-transport) just rewrites the same content (version-resolved merge is
-idempotent — property-tested in tests/test_cdc.py).
+versioned snapshot directory ``state_root/db.table/v{n}``, committed by the
+``_SUCCESS`` marker the parquet writer leaves last, and readers always see
+the latest committed one — no in-place overwrite, so a write torn before its
+marker is invisible and the next apply overwrites it, and a replayed
+micro-batch (at-least-once transport) just rewrites the same content
+(version-resolved merge is idempotent — property-tested in
+tests/test_cdc.py).
 
 Scale: the merge is one hash aggregation shuffled on the PK per batch; at
 100 TB the state table and the incoming batch would both be bucketed by PK
@@ -36,7 +43,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .cdc.apply import collapse_signs, latest_per_key
+from .cdc.apply import collapse_signs, merge_versioned, read_final_state
 from .cdc.envelope import parse_envelope
 
 
@@ -141,7 +148,7 @@ class CdcPipeline:
                 F.unix_millis("event_time").alias("version"),
             )
             if rule.mode == "replacing":
-                merged = latest_per_key(merge_base(self._state(rule), batch), rule.pk)
+                merged = merge_versioned(self._state(rule), batch, rule.pk)
             else:
                 merged = self._merge_collapsing(rule, batch)
             self._write_snapshot(rule, merged)
@@ -178,14 +185,12 @@ class CdcPipeline:
         state = self._state(rule)
         if state is not None:
             wm = state.select(rule.pk, F.col("version").alias("_wm"))
-            signs = (
+            signs = state.unionByName(
                 signs.join(wm, rule.pk, "left")
                 .filter(F.col("_wm").isNull() | (F.col("version") > F.col("_wm")))
                 .drop("_wm")
             )
-        return collapse_signs(
-            merge_base(state, signs), rule.pk, rule.payload_cols
-        )
+        return collapse_signs(signs, rule.pk, rule.payload_cols)
 
     def stream(self, msgs, msg_col: str = "msg", available_now: bool = True):
         """Continuous tail: checkpointed foreachBatch over the message stream."""
@@ -211,9 +216,5 @@ class CdcPipeline:
         if state is None:
             raise KeyError(f"no state yet for {rule.qualified}")
         if rule.mode == "replacing":
-            return state.filter(F.col("op") != "DELETE").drop("op", "version")
+            return read_final_state(state)
         return state.filter(F.col("sign") == 1).drop("sign", "version")
-
-
-def merge_base(state: DataFrame | None, batch: DataFrame) -> DataFrame:
-    return batch if state is None else state.unionByName(batch)

@@ -9,9 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from canal_clickhouse_spark.cdc.apply import apply_replacing
+from canal_clickhouse_spark.cdc.apply import apply_replacing, merge_versioned, read_final_state
 from canal_clickhouse_spark.cdc.changes import ORDER_COLS, change_log, sign_log
-from canal_clickhouse_spark.cdc.stream import merge_versioned, read_final_state
 from canal_clickhouse_spark.registry import QUERIES
 from tests.oracle_compare import canon_frame
 

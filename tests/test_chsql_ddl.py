@@ -475,6 +475,17 @@ def test_select_final_on_session_replacing_table(spark, sf_dir):
     ch.execute("INSERT INTO plain VALUES (1)")
     with pytest.raises(ValueError, match="read-time collapse"):
         ch.execute("SELECT * FROM plain FINAL")
+    # alias-then-FINAL joins exactly like the subquery spelling
+    aliased = ch.execute(
+        "SELECT o.k, o.val, p.x FROM kv AS o FINAL JOIN plain AS p ON p.x = o.k"
+    ).collect()
+    subquery = ch.execute(
+        "SELECT o.k, o.val, p.x FROM (SELECT * FROM kv FINAL) AS o"
+        " JOIN plain AS p ON p.x = o.k"
+    ).collect()
+    assert [tuple(r) for r in aliased] == [tuple(r) for r in subquery] == [
+        (1, "new", 1)
+    ]
 
 
 # ---------------------------------------------------------------------------

@@ -236,3 +236,33 @@ def test_pipeline_state_equals_chsession_final(spark, sf_dir, pipe):
     )
     assert via_chsession == via_pipeline
     assert len(via_chsession) > 0
+
+
+def test_torn_snapshot_is_invisible_then_overwritten(spark, sf_dir, pipe):
+    """A crash between a snapshot's data write and its ``_SUCCESS`` marker
+    leaves a ``v{n+1}`` directory with parquet files but no marker: readers
+    keep seeing ``v{n}``, and the next apply overwrites the torn directory
+    and commits it."""
+    import os
+
+    pipe.apply_messages(envelopes(spark, sf_dir, "INSERT", "true"))
+    rule = pipe.tables["shop.orders"]
+    committed = pipe._latest_version(rule)
+    before = rows_set(pipe.read_table("shop", "orders"))
+    torn = os.path.join(pipe.state_root, rule.qualified, f"v{committed + 1}")
+    pipe._state(rule).limit(3).write.parquet(torn)
+    os.remove(os.path.join(torn, "_SUCCESS"))
+
+    assert pipe._latest_version(rule) == committed
+    assert rows_set(pipe.read_table("shop", "orders")) == before
+
+    pipe.apply_messages(
+        envelopes(spark, sf_dir, "DELETE", "o_orderkey % 100 = 0", day_offset=1)
+    )
+    assert pipe._latest_version(rule) == committed + 1
+    assert os.path.exists(os.path.join(torn, "_SUCCESS"))
+    got = pipe.read_table("shop", "orders").select(*COLS)
+    want = spark.read.parquet(f"{sf_dir}/orders.parquet").filter(
+        "o_orderkey % 100 != 0"
+    ).select(*COLS)
+    assert rows_set(got) == rows_set(want)

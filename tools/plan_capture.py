@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from canal_clickhouse_spark import QUERIES, get_spark  # noqa: E402
 from bench import HEADLINE, EXTENDED  # noqa: E402
+from registry_audit import plan_shape  # noqa: E402
 
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                    "plans", os.environ.get("PLAN_ROUND", "r13"))
@@ -42,15 +43,12 @@ def main() -> None:
         plan = buf.getvalue()
         with open(os.path.join(OUT, f"{key}_{suffix}.txt"), "w") as f:
             f.write(plan)
-        n_ex = len(re.findall(r"^\(\d+\) Exchange$", plan, re.M))
-        n_bx = len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.M))
-        joins = "+".join(sorted(set(re.findall(r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)", plan))))
-        pyn = "+".join(sorted(set(re.findall(r"(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|PythonMapInArrow|ArrowAggregatePython|AggregateInPandas|WindowInPandas|FlatMapGroupsInArrow)", plan))))
+        n_ex, n_bx, joins, pyn = plan_shape(plan)
         n_scan = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
         n_win = len(re.findall(r"^\(\d+\) Window$", plan, re.M))
         n_agg = len(re.findall(r"^\(\d+\) (?:HashAggregate|ObjectHashAggregate|SortAggregate)$", plan, re.M))
         print(f"{key:30s} build={t_build:6.2f}s ex={n_ex:2d} bcast={n_bx} "
-              f"scans={n_scan} win={n_win} agg={n_agg} joins={joins or '-'} py={pyn or '-'}",
+              f"scans={n_scan} win={n_win} agg={n_agg} joins={joins} py={pyn}",
               flush=True)
 
 

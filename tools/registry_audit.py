@@ -18,6 +18,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from canal_clickhouse_spark import QUERIES, get_spark  # noqa: E402
 
+_JOINS_RE = re.compile(
+    r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
+    r"BroadcastNestedLoopJoin|CartesianProduct)"
+)
+_PYTHON_NODES_RE = re.compile(
+    r"(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|"
+    r"FlatMapGroupsInPandas|PythonMapInArrow|ArrowAggregatePython|"
+    r"AggregateInPandas|WindowInPandas|FlatMapGroupsInArrow)"
+)
+
+
+def plan_shape(plan: str) -> tuple[int, int, str, str]:
+    """Shuffle exchanges, broadcast exchanges, join strategies and
+    Python-boundary nodes of one ``explain("formatted")`` text; the two
+    name lists are ``+``-joined, ``-`` when empty."""
+    n_ex = len(re.findall(r"^\(\d+\) Exchange$", plan, re.M))
+    n_bx = len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.M))
+    joins = "+".join(sorted(set(_JOINS_RE.findall(plan)))) or "-"
+    pyn = "+".join(sorted(set(_PYTHON_NODES_RE.findall(plan)))) or "-"
+    return n_ex, n_bx, joins, pyn
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -38,18 +59,10 @@ def main() -> None:
         except Exception as e:  # streaming rigs / env-dependent keys
             lines.append(f"{key:34s} SKIP ({type(e).__name__}: {str(e)[:60]})")
             continue
-        n_ex = len(re.findall(r"^\(\d+\) Exchange$", plan, re.M))
-        n_bx = len(re.findall(r"^\(\d+\) BroadcastExchange$", plan, re.M))
-        joins = "+".join(sorted(set(re.findall(
-            r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|"
-            r"BroadcastNestedLoopJoin|CartesianProduct)", plan))))
-        pyn = "+".join(sorted(set(re.findall(
-            r"(BatchEvalPython|ArrowEvalPython|MapInPandas|MapInArrow|"
-            r"FlatMapGroupsInPandas|PythonMapInArrow|ArrowAggregatePython|AggregateInPandas|WindowInPandas|FlatMapGroupsInArrow)", plan))))
+        n_ex, n_bx, joins, pyn = plan_shape(plan)
         cart = "CARTESIAN!" if "CartesianProduct" in plan else ""
         lines.append(
-            f"{key:34s} ex={n_ex:2d} bcast={n_bx} joins={joins or '-'} "
-            f"py={pyn or '-'} {cart}"
+            f"{key:34s} ex={n_ex:2d} bcast={n_bx} joins={joins} py={pyn} {cart}"
         )
     with open(out_path, "w") as f:
         f.write("Full-registry plan audit (sf0.001) — r12 optimization round\n")
